@@ -56,8 +56,7 @@ class DedupConfig:
     # max_pairs_per_band / cc_checkpoint_every knobs were implemented
     # nowhere — dead fields that still altered config_hash; removed so the
     # config only advertises behavior that exists)
-    hot_band_cap: int = 2000            # max rows per (band, hash) bucket before the star fallback
-    hot_chunk_cap: int = 2000           # same policy for SimHash (chunk_idx, chunk_val) buckets
+    hot_band_cap: int = 2000            # max rows per LSH band / SimHash chunk bucket before the star fallback
 
     # -- connected components
     cc_max_iter: int = 50

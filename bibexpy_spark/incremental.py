@@ -56,14 +56,13 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import Window as W
 
 from bibexpy_spark.config import CANONICAL, DedupConfig
 from bibexpy_spark.functions import udfs
 from bibexpy_spark.operators import assembly, components, containment, exact, lsh
 from bibexpy_spark.operators import simhash as simhash_op
 from bibexpy_spark.operators import verify as verify_op
-from bibexpy_spark.pipeline import surrogate_id
+from bibexpy_spark.pipeline import surrogate_id, validate_options
 
 _SIG_COLS = ["conv_id", "content_sha", "shingles", "band_hashes"]
 
@@ -173,15 +172,9 @@ def run_incremental_dedup(
     """
     from pyspark.sql import types as T
 
-    bad_sources = set(extra_cluster_edges) - {"containment", "simhash"}
-    if bad_sources:
-        raise ValueError(f"unknown extra_cluster_edges: {sorted(bad_sources)}")
-    if "containment" in extra_cluster_edges and not with_containment:
-        raise ValueError("extra_cluster_edges='containment' needs with_containment")
-    if "simhash" in extra_cluster_edges and not with_simhash_pass:
-        raise ValueError("extra_cluster_edges='simhash' needs with_simhash_pass")
-    if with_containment and containment_mode not in ("prefix", "general", "general_sa"):
-        raise ValueError(f"unknown containment_mode: {containment_mode!r}")
+    validate_options(
+        with_containment, with_simhash_pass, containment_mode, extra_cluster_edges
+    )
 
     carried: DataFrame | None = None
     touched_cluster_ids: DataFrame | None = None
@@ -318,31 +311,14 @@ def run_incremental_dedup(
     new_reps = exact.representatives(grouped).select(*_SIG_COLS)
 
     # 3) LSH band join, delta-driven: only buckets containing >= 1 new rep
-    #    participate; within them, new members pair with every co-member
-    #    (small buckets) or with the bucket representative (star fallback —
-    #    including old members when the rep itself is new, matching the
-    #    batch policy's edge set for the combined corpus)
-    #    Shuffle shape (r4): a bucket participates iff it CONTAINS a new
-    #    member, and a bucket's key (band_idx, band_hash) is carried by
-    #    every one of its members — so the touched-bucket set is exactly
-    #    the delta reps' own band hashes.  Semi-joining the old side down
-    #    to touched rows BEFORE any aggregation turns the bucket groupBy
-    #    from an O(|corpus|·bands) shuffle into an O(|touched|) one; the
-    #    old corpus is only ever SCANNED (narrow conv_id+bands projection,
-    #    broadcast/AQE semi-join, no wide shuffle).  The surviving bucket
-    #    set, bucket_n, and bucket_rep are IDENTICAL to the unpruned agg:
-    #    every member of a touched bucket matches new_bands on that very
-    #    (band_idx, band_hash), so no member row is lost.
-    new_bands = (
-        new_reps.select(
-            F.posexplode("band_hashes").alias("band_idx", "band_hash")
-        ).distinct()
-    )
+    #    participate; the old side is semi-joined down to reps sharing a
+    #    band bucket with a new rep BEFORE any aggregation, so the old
+    #    corpus is only scanned, never wide-shuffled.  Every member of a
+    #    touched bucket carries that bucket's key, so no member is lost.
+    new_bands = lsh.explode_bands(new_reps).select(*lsh.BAND_KEYS).distinct()
     old_touched_ids = (
-        old_reps.select(
-            "conv_id", F.posexplode("band_hashes").alias("band_idx", "band_hash")
-        )
-        .join(new_bands, ["band_idx", "band_hash"], "left_semi")
+        lsh.explode_bands(old_reps)
+        .join(new_bands, lsh.BAND_KEYS, "left_semi")
         .select("conv_id")
         .distinct()
     )
@@ -352,50 +328,7 @@ def run_incremental_dedup(
         .unionByName(new_reps.withColumn("_is_new", F.lit(True)))
         .persist()
     )
-    ex_all = combined.select(
-        "conv_id", "_is_new", F.posexplode("band_hashes").alias("band_idx", "band_hash")
-    ).join(new_bands, ["band_idx", "band_hash"], "left_semi")
-    buckets = ex_all.groupBy("band_idx", "band_hash").agg(
-        F.count("*").alias("bucket_n"),
-        F.min("conv_id").alias("bucket_rep"),
-        F.max("_is_new").alias("_has_new"),
-    )
-    active = buckets.filter((F.col("bucket_n") >= 2) & F.col("_has_new"))
-    ex2 = ex_all.join(active, ["band_idx", "band_hash"]).persist()
-
-    small = ex2.filter(F.col("bucket_n") <= cfg.hot_band_cap)
-    a = small.filter("_is_new").select(
-        "band_idx", "band_hash", F.col("conv_id").alias("x_id")
-    )
-    b = small.select("band_idx", "band_hash", F.col("conv_id").alias("y_id"))
-    small_pairs = (
-        a.join(b, ["band_idx", "band_hash"])
-        .filter(F.col("x_id") != F.col("y_id"))
-        .select(
-            F.least("x_id", "y_id").alias("a_id"),
-            F.greatest("x_id", "y_id").alias("b_id"),
-        )
-    )
-    hot = ex2.filter(F.col("bucket_n") > cfg.hot_band_cap)
-    hot_pairs = (
-        hot.withColumn(
-            "_rep_new",
-            F.max(
-                F.when(F.col("conv_id") == F.col("bucket_rep"), F.col("_is_new"))
-            ).over(W.partitionBy("band_idx", "band_hash")),
-        )
-        .filter(
-            (F.col("conv_id") != F.col("bucket_rep"))
-            & (F.col("_is_new") | F.coalesce(F.col("_rep_new"), F.lit(False)))
-        )
-        .select(
-            F.least("conv_id", "bucket_rep").alias("a_id"),
-            F.greatest("conv_id", "bucket_rep").alias("b_id"),
-        )
-    )
-    cand = (
-        small_pairs.unionByName(hot_pairs).dropDuplicates(["a_id", "b_id"])
-    )
+    cand, _ = lsh.candidate_pairs(combined, cfg, new_col="_is_new")
 
     # 4) exact Jaccard verification against the combined rep signatures
     verified = verify_op.verify_pairs(cand, combined, cfg, id_col="conv_id")
@@ -601,7 +534,7 @@ def run_incremental_dedup(
         are materialized (ADVICE r3: a long micro-batch delta chain would
         otherwise accumulate three cached DataFrames per batch in executor
         storage for the session lifetime)."""
-        for df in (signed_new, new, combined, ex2):
+        for df in (signed_new, new, combined):
             df.unpersist()
         pref = delta_passes.get("containment_prefix_new")
         if pref is not None and "containment_pairs_new" in delta_passes:

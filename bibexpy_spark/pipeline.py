@@ -42,6 +42,25 @@ def surrogate_id(col):
     )
 
 
+def validate_options(
+    with_containment: bool,
+    with_simhash_pass: bool,
+    containment_mode: str,
+    extra_cluster_edges: tuple[str, ...],
+) -> None:
+    """Reject a bad pass option before any stage runs (shared by
+    :func:`run_dedup` and ``incremental.run_incremental_dedup``)."""
+    bad_sources = set(extra_cluster_edges) - {"containment", "simhash"}
+    if bad_sources:
+        raise ValueError(f"unknown extra_cluster_edges: {sorted(bad_sources)}")
+    if "containment" in extra_cluster_edges and not with_containment:
+        raise ValueError("extra_cluster_edges='containment' needs with_containment")
+    if "simhash" in extra_cluster_edges and not with_simhash_pass:
+        raise ValueError("extra_cluster_edges='simhash' needs with_simhash_pass")
+    if with_containment and containment_mode not in ("prefix", "general", "general_sa"):
+        raise ValueError(f"unknown containment_mode: {containment_mode!r}")
+
+
 def run_dedup(
     spark: SparkSession,
     turns: DataFrame,
@@ -70,6 +89,9 @@ def run_dedup(
     edges use whichever pass ``containment_mode`` selects; each source
     requires its pass to be enabled.
     """
+    validate_options(
+        with_containment, with_simhash_pass, containment_mode, extra_cluster_edges
+    )
 
     def materialize(stage: str, build) -> DataFrame:
         if run is not None:
@@ -150,20 +172,10 @@ def run_dedup(
     )
     all_edges = exact_edges_nid.unionByName(dup_edges_nid)
 
-    bad_sources = set(extra_cluster_edges) - {"containment", "simhash"}
-    if bad_sources:
-        raise ValueError(f"unknown extra_cluster_edges: {sorted(bad_sources)}")
-    if "containment" in extra_cluster_edges and not with_containment:
-        raise ValueError("extra_cluster_edges='containment' needs with_containment")
-    if "simhash" in extra_cluster_edges and not with_simhash_pass:
-        raise ValueError("extra_cluster_edges='simhash' needs with_simhash_pass")
-
     # optional passes (signals by default; edge sources when opted in) —
     # built before clustering so their pairs can join the edge set
     containment_prefix = containment_general = simhash_pair_df = None
     if with_containment:
-        if containment_mode not in ("prefix", "general", "general_sa"):
-            raise ValueError(f"unknown containment_mode: {containment_mode!r}")
         containment_prefix = materialize(
             "contain_prefix", lambda: containment.prefix_containment_pairs(signed, cfg)
         )

@@ -8,6 +8,8 @@ PLANS.md) instead of eyeballed.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame
 
 
@@ -63,5 +65,9 @@ def python_eval_nodes(df: DataFrame) -> int:
 
 
 def exchange_count(df: DataFrame) -> int:
-    """Shuffle exchanges in the plan — the scale currency."""
-    return explain_formatted(df).count("Exchange hashpartitioning")
+    """Shuffle exchanges in the plan — the scale currency.  Counts distinct
+    ``Exchange (id)`` nodes of the formatted tree: the partitioning sits on
+    a separate ``Arguments:`` line, a cached subtree reprints per reference
+    under the same ids, and BroadcastExchange / ReusedExchange do not
+    shuffle."""
+    return len(set(re.findall(r"(?<!\w)Exchange \((\d+)\)", explain_formatted(df))))

@@ -9,8 +9,11 @@ from bibexpy_spark.session import build_spark
 
 @pytest.fixture(scope="session")
 def spark():
+    # the fixtures are small: a 4 GiB driver heap (build_spark defaults to
+    # 48g) keeps lazy heap growth from outrunning a 16 GB host mid-suite
     s = build_spark(app_name="bibexpy_spark_tests", cores=8,
-                    extra_conf={"spark.sql.shuffle.partitions": "8"})
+                    extra_conf={"spark.sql.shuffle.partitions": "8",
+                                "spark.driver.memory": "4g"})
     yield s
     s.stop()
 

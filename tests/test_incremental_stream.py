@@ -260,8 +260,8 @@ def test_ckpt_identity_guard(tmp_path):
 
 def test_simhash_cap_crossing_divergence_is_bounded_superset(spark):
     """VERDICT r4 'what's missing' #2 pinned: a chunk bucket CROSSING
-    hot_chunk_cap between batches makes the composed pair state diverge
-    from a fresh batch run (operators/simhash.py:180-184).  The blast
+    hot_band_cap between batches makes the composed pair state diverge
+    from a fresh batch run (operators/lsh.py module docstring).  The blast
     radius is exactly this, no worse: (a) the state is a SUPERSET of the
     batch pairs — nothing is ever lost; (b) every extra pair is a genuine
     within-radius pair captured while the bucket was sub-cap (Hamming-
@@ -273,7 +273,7 @@ def test_simhash_cap_crossing_divergence_is_bounded_superset(spark):
     from bibexpy_spark.incremental import compose_pair_state
     from bibexpy_spark.operators import simhash as sh
 
-    cfg = replace(CANONICAL, hot_chunk_cap=3)
+    cfg = replace(CANONICAL, hot_band_cap=3)
     h = 0x1234ABCD5678EF00
     old = spark.createDataFrame(
         [("a1", h), ("a2", h), ("a3", h)], "conv_id string, simhash long")

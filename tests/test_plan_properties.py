@@ -284,6 +284,43 @@ def test_gram_verify_empty_arrays_emit_no_pair(spark):
     assert {(r["a_id"], r["b_id"]) for r in rows} == {("c", "d")}
 
 
+def test_exchange_count_counts_shuffles(spark):
+    """A groupBy shuffles once; the formatted plan prints its partitioning
+    on a separate Arguments: line, which the counter must not depend on."""
+    df = spark.range(100).groupBy((F.col("id") % 7).alias("k")).count()
+    assert inspect.exchange_count(df) >= 1
+    assert inspect.exchange_count(spark.range(100)) == 0
+
+
+def test_batch_bucket_join_plan_shape(spark):
+    """The batch LSH and SimHash plans stay at five shuffle exchanges each
+    and free of cross joins, with broadcasts off as at scale: one self-join
+    serves small and star pairs, so the bucket join adds no shuffle to the
+    batch hot path."""
+    from bibexpy_spark.config import CANONICAL
+    from bibexpy_spark.operators import lsh
+    from bibexpy_spark.operators import simhash as sh
+
+    reps = spark.createDataFrame(
+        [(f"c{i}", [i % 3] * CANONICAL.bands) for i in range(10)],
+        "conv_id string, band_hashes array<long>",
+    )
+    simmed = spark.createDataFrame(
+        [(f"c{i}", i % 3) for i in range(10)], "conv_id string, simhash long"
+    )
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        for df in (lsh.candidate_pairs(reps, CANONICAL)[0],
+                   sh.simhash_pairs(simmed, CANONICAL)):
+            assert inspect.exchange_count(df) <= 5
+            strategies = inspect.join_strategies(df)
+            assert "CartesianProduct" not in strategies
+            assert "BroadcastNestedLoopJoin" not in strategies
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+
+
 def test_simhash_hot_bucket_star_fallback(spark):
     """A hot (chunk_idx, chunk_val) bucket must degrade to the star
     pattern (n-1 pairs through the bucket rep), not a quadratic self-join
@@ -301,7 +338,7 @@ def test_simhash_hot_bucket_star_fallback(spark):
         + [("z1", 7654321), ("z2", 7654321 ^ 1)],   # hamming-1 pair, cold bucket
         "conv_id string, simhash long",
     )
-    cfg = replace(CANONICAL, hot_chunk_cap=4)
+    cfg = replace(CANONICAL, hot_band_cap=4)
     pairs = {
         (r["a_id"], r["b_id"])
         for r in sh.simhash_pairs(simmed, cfg).collect()
@@ -330,7 +367,7 @@ def test_simhash_delta_matches_batch_with_star(spark):
     from bibexpy_spark.config import CANONICAL
     from bibexpy_spark.operators import simhash as sh
 
-    cfg = replace(CANONICAL, hot_chunk_cap=3)
+    cfg = replace(CANONICAL, hot_band_cap=3)
     old = spark.createDataFrame(
         [(f"h{i}", 999) for i in range(6)] + [("q1", 555)],
         "conv_id string, simhash long",
@@ -351,3 +388,41 @@ def test_simhash_delta_matches_batch_with_star(spark):
     }
     assert prior | delta == batch
     assert all("n" in a or "n" in b for a, b in delta)
+
+    # second case: the LSH band join runs through the same bucket join.
+    # h* pile into hot buckets (star on h0, which stays the minimum); a1/n2
+    # share a small bucket (new id above the old one), n3/n4 (both new)
+    # another, q2/q3 (both old) a third; n5-n7 turn z1's lone bucket into a
+    # hot one whose rep n5 is new
+    from bibexpy_spark.operators import lsh
+
+    def bands(base, first):
+        return [first] + [base + i for i in range(1, cfg.bands)]
+
+    def pair_set(signed, new_col=None):
+        pairs, _ = lsh.candidate_pairs(signed, cfg, new_col=new_col)
+        return {(r["a_id"], r["b_id"]) for r in pairs.collect()}
+
+    schema = "conv_id string, band_hashes array<long>"
+    old = spark.createDataFrame(
+        [(f"h{i}", [7] * cfg.bands) for i in range(6)]
+        + [("a1", bands(1000, 1000)), ("q2", bands(3000, 5)),
+           ("q3", bands(4000, 5)), ("z1", bands(7000, 11))],
+        schema,
+    )
+    new = spark.createDataFrame(
+        [("n1", [7] * cfg.bands), ("n2", bands(2000, 1000)),
+         ("n3", bands(5000, 9)), ("n4", bands(6000, 9)),
+         ("n5", bands(8000, 11)), ("n6", bands(9000, 11)),
+         ("n7", bands(10000, 11))],
+        schema,
+    )
+    assert lsh.candidate_pairs(old, cfg)[1].filter("star_mode").count() > 0
+    delta = pair_set(
+        old.withColumn("_is_new", F.lit(False))
+        .unionByName(new.withColumn("_is_new", F.lit(True))),
+        new_col="_is_new",
+    )
+    assert pair_set(old) | delta == pair_set(old.unionByName(new))
+    assert all("n" in a or "n" in b for a, b in delta)
+    assert {("h0", "n1"), ("a1", "n2"), ("n3", "n4"), ("n5", "z1")} <= delta

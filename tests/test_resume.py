@@ -84,6 +84,75 @@ def test_input_change_invalidates_checkpoints(spark, turns_df, warehouse):
     assert not run2.stage_fresh("assemble")
 
 
+def _cache_entries(spark) -> int:
+    return spark._jsparkSession.sharedState().cacheManager().numCachedEntries()
+
+
+def test_run_dedup_leaves_session_cache_as_found(spark, turns_df, warehouse):
+    """A RunContext run materializes every stage, so nothing it cached may
+    outlive it: two runs in one session leave the CacheManager as found."""
+    before = _cache_entries(spark)
+    for run_id in ("runE1", "runE2"):
+        run = RunContext(spark, CANONICAL, warehouse, run_id=run_id, input_token="tok1")
+        pipeline.run_dedup(spark, turns_df, CANONICAL, run=run)
+        run.close()
+        assert _cache_entries(spark) == before
+
+
+def test_incremental_cleanup_releases_its_caches(spark, turns_df, warehouse):
+    """Every frame a delta fold caches (grown path, general containment and
+    SimHash passes included) is released by its cleanup hook."""
+    from pyspark.sql import functions as F
+
+    from bibexpy_spark import incremental
+
+    is_new = F.abs(F.xxhash64("conv_id")) % 10 >= 7
+    old = turns_df.filter(~is_new)
+    run = RunContext(spark, CANONICAL, warehouse, run_id="runG", input_token="tok1")
+    prior = pipeline.run_dedup(spark, old, CANONICAL, run=run)
+    run.close()
+    grown_id = old.select(F.min("conv_id")).first()[0]
+    grown = old.filter(F.col("conv_id") == grown_id).withColumn(
+        "turn_idx", F.col("turn_idx") + 1000
+    )
+    before = _cache_entries(spark)
+    incr = incremental.run_incremental_dedup(
+        spark, turns_df.filter(is_new).unionByName(grown),
+        prior["signed"].drop("nid"), prior["clusters"], prior_turns=old,
+        with_containment=True, with_simhash_pass=True, containment_mode="general",
+    )
+    for key in ("clusters", "cluster_remap", "stats",
+                "containment_pairs_new", "simhash_pairs_new"):
+        incr[key].collect()
+    assert incr["stats"].first()["n_retracted_clusters"] == 1
+    assert _cache_entries(spark) > before
+    incr["cleanup"]()
+    assert _cache_entries(spark) == before
+
+
+@pytest.mark.parametrize("kwargs", [
+    {"extra_cluster_edges": ("bogus",)},
+    {"containment_mode": "bogus"},
+    {"with_simhash_pass": False, "extra_cluster_edges": ("simhash",)},
+])
+def test_bad_option_raises_before_any_stage(spark, turns_df, warehouse, kwargs):
+    """Pass options are validated before the first stage: a bad value
+    leaves no stage manifest behind, in the batch and the delta run."""
+    from bibexpy_spark import incremental
+
+    run = RunContext(spark, CANONICAL, warehouse, run_id="runF", input_token="tok1")
+    with pytest.raises(ValueError):
+        pipeline.run_dedup(spark, turns_df, CANONICAL, run=run, **kwargs)
+    run.close()
+    written = os.listdir(run.run_dir) if os.path.isdir(run.run_dir) else []
+    assert not [f for f in written if f.endswith(".manifest.json")], written
+    with pytest.raises(ValueError):
+        incremental.run_incremental_dedup(
+            spark, turns_df, None, None, with_containment=True,
+            **{"with_simhash_pass": True, **kwargs},
+        )
+
+
 def test_input_token_fingerprints_files(tmp_path):
     p = tmp_path / "x.parquet"
     p.write_bytes(b"abc")
